@@ -2,9 +2,11 @@
 
 The program under test is the Spark JVM that pyspark launches as a child
 of the benchmark process, plus the Python workers the JVM forks. These
-helpers sum over that tree; the benchmark's own Python process is left
-out, because it also holds the generated inputs and the reference
-computations.
+helpers sum over that tree. The benchmark's own process runs the
+program's Python side too (DataFrame construction, ``foreachBatch``), so
+its CPU is added by the caller, less that of the sampling thread here,
+which is the benchmark's own overhead. Its memory is left out, because
+it also holds the generated inputs and the reference computations.
 """
 
 from __future__ import annotations
@@ -103,19 +105,25 @@ class RssPeak:
     resident memory (kept by the kernel, so no sample can miss it) plus
     the peak summed PSS of its Python workers, sampled on a background
     thread. Short-lived helpers the JVM spawns share its address space
-    until they exec, so they are left out rather than counted twice."""
+    until they exec, so they are left out rather than counted twice.
 
-    def __init__(self, root: int, interval_s: float = 0.05):
+    Each sample lists /proc, so its cost grows with the processes on the
+    host; ``cpu_s`` is the CPU the sampling thread has used so far, for
+    the caller to leave out of the program's CPU."""
+
+    def __init__(self, root: int, interval_s: float = 0.1):
         self.root = root
         self.interval_s = interval_s
         self.workers = 0
         self.peak = 0
+        self.cpu_s = 0.0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
     def _run(self) -> None:
         while not self._stop.is_set():
             self.workers = max(self.workers, workers_pss_bytes(self.root))
+            self.cpu_s = time.thread_time()
             self._stop.wait(self.interval_s)
 
     def __enter__(self) -> "RssPeak":

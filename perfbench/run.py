@@ -26,7 +26,6 @@ import argparse
 import importlib.util
 import json
 import os
-import resource
 import shutil
 import signal
 import statistics
@@ -49,9 +48,11 @@ WORKLOADS = {
 }
 # Local threads plus at most one Python worker per thread stay within
 # the 4 vCPUs the bounds were measured on; the heap is fixed so that
-# garbage collection does not vary with the host's memory.
+# garbage collection does not vary with the host's memory, and touched
+# at start so that the resident size does not vary with how much of it
+# a run happened to reach.
 CPUS = 3
-HEAP = "2g"
+HEAP = "4g"
 GIVE_UP_S = 100
 END_TO_END = {
     "setup_s": "s",
@@ -74,9 +75,6 @@ PER_LAYER = {
     "operators.spatial.candidates_per_pixel": "ratio",
     "operators.zonal.exec_s": "s",
     "operators.zonal.shuffle_write_mb": "MB",
-    "streaming.dedup.batch_s": "s",
-    "streaming.dedup.jobs_per_batch": "count",
-    "streaming.dedup.persisted_rdds_end": "count",
     "exec.jobs": "count",
     "exec.stages": "count",
     "exec.tasks": "count",
@@ -87,6 +85,13 @@ PER_LAYER = {
     "exec.shuffle_write_mb": "MB",
     "exec.spill_mb": "MB",
     "exec.concurrency": "ratio",
+}
+# Filled by dedup_stream alone, which is not gated (README.md); printed
+# by its traced run besides PER_LAYER.
+STREAM_LAYER = {
+    "streaming.dedup.batch_s": "s",
+    "streaming.dedup.jobs_per_batch": "count",
+    "streaming.dedup.persisted_rdds_end": "count",
 }
 
 
@@ -99,7 +104,8 @@ def configure_env(work: str, trace: bool) -> None:
     confs = {
         "spark.local.dir": os.path.join(work, "local"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        "spark.driver.extraJavaOptions": f"-Xms{HEAP} -Djava.io.tmpdir={tmp}",
+        "spark.driver.extraJavaOptions": f"-Xms{HEAP} -XX:+AlwaysPreTouch "
+                                         f"-Djava.io.tmpdir={tmp}",
         "spark.ui.showConsoleProgress": "false",
     }
     if trace:
@@ -271,11 +277,70 @@ def main(argv=None) -> int:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def cpu_s(jvm: int) -> float:
-    """CPU of the program: the JVM tree plus this process, which runs the
-    program's Python side (DataFrame construction, foreachBatch)."""
-    own = resource.getrusage(resource.RUSAGE_SELF)
-    return procs.tree_cpu_s(jvm) + own.ru_utime + own.ru_stime
+class Passes:
+    """The operations of one run: a cold pass, then warm passes for the
+    window and at least until the warm-up and counted ones are done. The
+    outputs of the cold and of the last warm pass are checked."""
+
+    def __init__(self, pipeline, spans: Spans, cpu):
+        self.pipeline, self.spans, self.cpu = pipeline, spans, cpu
+        self.attempted = self.failed = 0
+        self.cold: dict | None = None
+        self.warm: list[tuple[int, dict]] = []
+        self.errors: list[str] = []
+
+    def one(self) -> dict | None:
+        i = self.spans.index = self.attempted
+        self.attempted += 1
+        cpu0, t0 = self.cpu(), time.perf_counter()
+        try:
+            info = self.pipeline.run(self.spans)
+        except Exception as e:  # a failed pass is counted, the run goes on
+            self.failed += 1
+            print(f"pass {i} failed: {e!r}", file=sys.stderr)
+            return None
+        info.update(wall=time.perf_counter() - t0, cpu=self.cpu() - cpu0)
+        print(f"pass {i}: wall {info['wall']:.3f} s, cpu {info['cpu']:.2f} s", file=sys.stderr)
+        return info
+
+    def verify(self, exp) -> None:
+        try:
+            self.errors += self.pipeline.verify(exp)
+        except Exception as e:  # e.g. an output the program never wrote
+            self.errors.append(f"outputs unreadable: {e!r}")
+
+    def run(self, exp, seconds: float) -> None:
+        p = self.pipeline
+        self.cold = self.one()
+        if self.cold is not None:
+            self.verify(exp)
+        # A run whose passes fail makes no more attempts than a run that
+        # only just reaches its counted passes, and no run goes past
+        # GIVE_UP_S, well inside the 180 s a run may take.
+        t0 = time.perf_counter()
+        while not p.exhausted:
+            elapsed = time.perf_counter() - t0
+            enough = self.attempted > p.warmup + p.counted
+            if (enough and (elapsed >= seconds or self.failed)) or elapsed >= GIVE_UP_S:
+                break
+            info = self.one()
+            if info is not None:
+                self.warm.append((self.attempted - 1, info))
+        if self.warm:
+            self.verify(exp)
+
+    @property
+    def counted(self) -> list[tuple[int, dict]]:
+        # The same pass indices count in every run, so a faster run does
+        # not also count passes the JIT has had longer to optimise.
+        p = self.pipeline
+        return self.warm[p.warmup:p.warmup + p.counted]
+
+    @property
+    def correct(self) -> bool:
+        """True only if the cold and a warm pass wrote outputs and every
+        check of them held: a run with nothing checked is not correct."""
+        return self.cold is not None and bool(self.warm) and not self.errors
 
 
 def measure(args, work: str) -> int:
@@ -294,80 +359,47 @@ def measure(args, work: str) -> int:
     exp = mod.expected(mod.generate(args.seed, in_dir))
     spans = Spans(spark.sparkContext, bool(args.trace))
     pipeline = mod.Pipeline(spark, in_dir, os.path.join(work, "out"))
-    attempted = failed = 0
-    errors: list[str] = []
-
-    def one_pass(i: int) -> dict | None:
-        nonlocal attempted, failed
-        spans.index = i
-        attempted += 1
-        cpu0, t0 = cpu_s(jvm), time.perf_counter()
-        try:
-            info = pipeline.run(spans)
-        except Exception as e:  # a failed pass is counted, the run goes on
-            failed += 1
-            print(f"pass {i} failed: {e!r}", file=sys.stderr)
-            return None
-        info.update(wall=time.perf_counter() - t0, cpu=cpu_s(jvm) - cpu0)
-        print(f"pass {i}: wall {info['wall']:.3f} s, cpu {info['cpu']:.2f} s", file=sys.stderr)
-        return info
-
-    def verify() -> list[str]:
-        try:
-            return pipeline.verify(exp)
-        except Exception as e:  # e.g. an output the program never wrote
-            return [f"outputs unreadable: {e!r}"]
 
     try:
         with procs.RssPeak(jvm) as rss:
-            cold = one_pass(0)
-            if cold is not None:
-                errors += verify()
-            warm = []
-            # Warm passes run for the window and at least until the counted
-            # ones after the JIT warm-up are done; a run whose passes keep
-            # failing stops well inside the 180 s a run may take.
-            t0 = time.perf_counter()
-            while not pipeline.exhausted:
-                elapsed = time.perf_counter() - t0
-                enough = len(warm) >= pipeline.warmup + pipeline.counted
-                if (elapsed >= args.seconds and enough) or elapsed >= GIVE_UP_S:
-                    break
-                info = one_pass(attempted)
-                if info is not None:
-                    warm.append((attempted - 1, info))
-            if warm:
-                errors += verify()
+            # The program's CPU: the JVM tree, plus this process, which
+            # runs the program's Python side, less the memory sampler.
+            def cpu() -> float:
+                return procs.tree_cpu_s(jvm) + time.process_time() - rss.cpu_s
+
+            passes = Passes(pipeline, spans, cpu)
+            passes.run(exp, args.seconds)
             pipeline.close()
             persisted_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
     finally:
         stop_session(spark)
 
-    for e in errors:
+    for e in passes.errors:
         print(f"check failed: {e}", file=sys.stderr)
-    # The same pass indices count in every run, so a faster run does not
-    # also count passes the JIT has had longer to optimise.
-    passes = warm[pipeline.warmup:pipeline.warmup + pipeline.counted]
-    if cold is None or not passes:
-        print(result(not errors, attempted, failed, {}, {}))
+    counted = passes.counted
+    correct, attempted, failed = passes.correct, passes.attempted, passes.failed
+    if passes.cold is None or not counted:
+        print(result(correct, attempted, failed, {}, {}))
         return 1
     metrics = {
         "setup_s": setup_s,
-        "cold_s": cold["wall"],
-        "warm_s": statistics.median(p["wall"] for _, p in passes),
-        "warm_cpu_s": statistics.median(p["cpu"] for _, p in passes),
+        "cold_s": passes.cold["wall"],
+        "warm_s": statistics.median(p["wall"] for _, p in counted),
+        "warm_cpu_s": statistics.median(p["cpu"] for _, p in counted),
         "peak_rss_mb": rss.peak / eventlog.MB,
     }
-    print(f"[{args.workload} seed={args.seed} trace={args.trace}] warm passes {len(warm)} "
-          f"(counted {len(passes)}), Python workers {rss.workers / eventlog.MB:.0f} MB: "
+    print(f"[{args.workload} seed={args.seed} trace={args.trace}] warm passes "
+          f"{len(passes.warm)} (counted {len(counted)}), Python workers "
+          f"{rss.workers / eventlog.MB:.0f} MB, sampler CPU {rss.cpu_s:.2f} s: "
           + json.dumps(metrics), file=sys.stderr)
     if args.trace:
-        layers = layer_metrics(spans, passes, setup_s, os.path.join(work, "eventlog"),
+        layers = layer_metrics(spans, counted, setup_s, os.path.join(work, "eventlog"),
                                persisted_rdds)
-        print(result(not errors, attempted, failed, layers, PER_LAYER))
+        units = dict(PER_LAYER, **STREAM_LAYER) if args.workload == "dedup_stream" else PER_LAYER
+        print(result(correct, attempted, failed, layers, units))
     else:
-        print(result(not errors, attempted, failed, metrics, END_TO_END))
-    return 1 if errors else 0
+        print(result(correct, attempted, failed, metrics, END_TO_END))
+    return 0 if correct else 1
 
 
 if __name__ == "__main__":

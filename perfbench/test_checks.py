@@ -168,7 +168,52 @@ def test_benchmark_json_matches_the_metrics_printed():
     spec = json.load(open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")))
     assert {m["name"]: m["unit"] for m in spec["end_to_end"]} == run.END_TO_END
     assert {m["name"]: m["unit"] for m in spec["per_layer"]} == run.PER_LAYER
+    assert not set(run.STREAM_LAYER) & set(run.PER_LAYER)
     assert {w["name"] for w in spec["workloads"]} <= set(run.WORKLOADS)
+
+
+class _Pipeline:
+    """Stands in for a workload: passes from ``fail_from`` on raise."""
+
+    exhausted = False
+    warmup = counted = 2
+
+    def __init__(self, fail_from: int):
+        self.fail_from, self.runs = fail_from, 0
+
+    def run(self, span) -> dict:
+        self.runs += 1
+        if span.index >= self.fail_from:
+            raise RuntimeError("pass failed")
+        return {}
+
+    def verify(self, exp) -> list[str]:
+        return []
+
+
+def _passes(fail_from: int) -> run.Passes:
+    passes = run.Passes(_Pipeline(fail_from), run.Spans(None, False), lambda: 0.0)
+    passes.run(exp=None, seconds=0)
+    return passes
+
+
+def test_every_pass_failing_is_not_correct():
+    passes = _passes(fail_from=0)
+    assert passes.attempted == passes.failed == 5
+    assert not passes.correct
+
+
+def test_every_warm_pass_failing_is_not_correct():
+    passes = _passes(fail_from=1)
+    assert (passes.attempted, passes.failed) == (5, 4)
+    assert not passes.correct
+
+
+def test_passing_run_counts_the_passes_after_warm_up():
+    passes = _passes(fail_from=99)
+    assert (passes.attempted, passes.failed) == (5, 0)
+    assert passes.correct
+    assert [i for i, _ in passes.counted] == [3, 4]
 
 
 def test_without_the_program_every_operation_fails(tmp_path):
