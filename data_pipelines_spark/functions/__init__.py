@@ -8,7 +8,6 @@ from data_pipelines_spark.functions.grid import (
 )
 from data_pipelines_spark.functions.classify import (
     condition_severity,
-    exceedance_flags,
     intensity_label,
     peak_timing_label,
     tendency_label,
@@ -27,7 +26,6 @@ __all__ = [
     "round_grid_keys",
     "snap_to_grid",
     "condition_severity",
-    "exceedance_flags",
     "intensity_label",
     "peak_timing_label",
     "tendency_label",

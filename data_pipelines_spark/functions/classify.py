@@ -12,33 +12,12 @@ tendency U/C/D, intensity P/R/Y/G, peak timing BB/GC/GB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 SEVERITY_THRESHOLD = 0.30  # probability band boundary, transforms.py:115-121,249-257
 TENDENCY_UP_MULT = 1.10    # transforms.py:199
 TENDENCY_DOWN_MULT = 0.90  # transforms.py:202
-
-
-def exceedance_flags(
-    df: DataFrame,
-    value_col: str = "dis24",
-    periods: tuple[int, ...] = (2, 5, 20),
-    threshold_prefix: str = "threshold_",
-) -> DataFrame:
-    """0/1 flags for value >= per-row return-period threshold.
-
-    Reference F5: `utils/flood/transforms.py:37-41` (cast of the boolean
-    to int64). NULL thresholds (unmatched cells after the left join)
-    yield NULL flags, matching pandas NaN-comparison → False semantics
-    only after the reference drops NaN rows; callers filter first.
-    """
-    for p in periods:
-        df = df.withColumn(
-            f"exceed_{p}y",
-            (F.col(value_col) >= F.col(f"{threshold_prefix}{p}y")).cast("long"),
-        )
-    return df
 
 
 def condition_severity(p20: Column, p5: Column, p2: Column) -> Column:

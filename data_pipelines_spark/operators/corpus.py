@@ -794,11 +794,10 @@ def filter_by_group_quantile(
     `functions.text` quality signals).
 
     Scale shape: one aggregate pass computes the per-group cutoff
-    (``approx_percentile`` by default — the same sketch-vs-exact
-    contract as A1's ``exact_quantiles``; ``exact=True`` opts into the
-    exact percentile, whose buffer holds each group's values), then the
-    cutoff table (|groups| rows) joins back — AQE broadcasts it when
-    dimension-sized. With no ``group_cols`` the single global cutoff
+    (``approx_percentile`` by default, a bounded-memory sketch;
+    ``exact=True`` opts into the exact percentile, whose buffer holds
+    each group's values), then the cutoff table (|groups| rows) joins
+    back — AQE broadcasts it when dimension-sized. With no ``group_cols`` the single global cutoff
     row is cross-joined broadcast. NULL values never pass (SQL
     comparison semantics), matching "unscored rows are dropped"; a
     NULL GROUP is a real stratum (GROUP BY semantics) — its rows are

@@ -230,14 +230,18 @@ def minhash_signatures(
         sig = F.array(*[F.col(f"__m{i}") for i in range(num_hashes)])
         return mins.select(F.col(id_col), sig.alias("minhash"))
 
-    if num_hashes & (num_hashes - 1):
+    if num_hashes < 2 or num_hashes & (num_hashes - 1):
         # Bucket (low bits) and rank (high bits) are only disjoint bit
         # ranges when num_hashes is a power of two; otherwise pmod and
-        # the shift share bits and per-bucket minima correlate.
-        raise ValueError(f"num_hashes must be a power of two, got {num_hashes}")
+        # the shift share bits and per-bucket minima correlate. One
+        # bucket would need a zero-bit shift the rotate-sort below
+        # cannot express.
+        raise ValueError(
+            f"num_hashes must be a power of two >= 2, got {num_hashes}"
+        )
     from data_pipelines_spark.functions.text import let
 
-    shift = max(1, num_hashes.bit_length() - 1)
+    shift = num_hashes.bit_length() - 1
 
     # Row-local assembly (guide §2.4 — remove shuffles outright): every
     # shingle is hashed ONCE into an array bound by `let`; signature
@@ -503,12 +507,8 @@ def minhash_near_duplicates(
     # est sides reuse it (three separate compilations of that expression
     # measurably inflated the cold first-pass: minhash cold 9.0 s vs
     # ~5 s with the shared column).
-    # Lifecycle: the returned frame references these cached blocks
-    # lazily, so this function cannot unpersist them itself — the
-    # CALLER owns the cache entry and should `spark.catalog.clearCache()`
-    # (or unpersist via the plan's cached relation) once the result has
-    # been consumed, exactly as a long-lived driver serving many queries
-    # must. The bench/driver harnesses clear the cache between runs.
+    # The returned frame reads these blocks lazily, so the harness that
+    # runs it owns them (the rule in `session.persisted`).
     sigs = (
         minhash_signatures(docs, text_col, id_col, num_hashes, shingle_k, portable)
         .withColumn(
@@ -633,18 +633,22 @@ def incremental_near_duplicates(
     every day; Exchange counts pinned in tests/test_bucketed.py). Ids
     must be globally unique across corpus and batches (the store's
     contract).
+
+    Nothing is cached here: the returned frames are lazy, so this
+    function could never release a cache they read. The batch's
+    signatures are a subtree of every branch of both plans, so the code
+    that runs them should cache ``minhash_signatures(new_docs, text_col,
+    id_col, num_hashes, shingle_k)`` around its actions (with
+    :func:`~data_pipelines_spark.session.persisted`); Spark's
+    plan-matching cache then serves each branch from that one entry.
+    Uncached, every action re-derives the signatures per branch, about
+    ten times slower on a 5-document batch.
     """
-    # Caller-owned cache entry, same lifecycle note as
-    # `minhash_near_duplicates`: both returned frames (pairs AND
-    # new_signatures) read these blocks lazily, so the callee cannot
-    # unpersist; clear after consuming the results.
-    sigs_new = (
-        minhash_signatures(new_docs, text_col, id_col, num_hashes, shingle_k)
-        .withColumn(
-            "band_keys",
-            _band_key_array(F.col("minhash"), num_hashes, num_bands, False),
-        )
-        .persist()
+    sigs_new = minhash_signatures(
+        new_docs, text_col, id_col, num_hashes, shingle_k
+    ).withColumn(
+        "band_keys",
+        _band_key_array(F.col("minhash"), num_hashes, num_bands, False),
     )
     buckets_new = sigs_new.select(
         F.col(id_col), F.posexplode("band_keys").alias("band", "band_hash")

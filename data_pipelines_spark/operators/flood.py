@@ -23,7 +23,7 @@ Spark-first re-expression choices (vs the reference's dask dataflow,
 - Quantiles are **exact percentiles** (`F.percentile`): the reference's
   custom dd.Aggregations are only correct at npartitions==1 (its tested
   configuration, `transforms.py:43-53`); we implement the intended
-  semantics. ``approx_percentile`` is the opt-in scale path.
+  semantics.
 - All classification chains are native ``F.when`` expressions
   (`functions/classify.py`) — no Python in the hot path.
 
@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 
 from data_pipelines_spark.functions.classify import (
     condition_severity,
-    exceedance_flags,
     intensity_label,
     peak_timing_label,
     tendency_label,
@@ -57,8 +56,6 @@ def compute_detailed_forecast(
     forecast_df: DataFrame,
     threshold_df: DataFrame,
     periods: tuple[int, ...] = (2, 5, 20),
-    exact_quantiles: bool = True,
-    approx_accuracy: int = 10000,
 ) -> DataFrame:
     """Ensemble statistics + exceedance probabilities per (cell, day).
 
@@ -67,11 +64,6 @@ def compute_detailed_forecast(
     ``forecast_df``: long-form ensemble rows (number, step, latitude,
     longitude, issued_on, valid_for, dis24). ``threshold_df``: one row
     per cell with threshold_{2,5,20}y.
-
-    With ``exact_quantiles=False`` the quantiles switch to
-    ``approx_percentile`` (single-pass sketch, no per-group sort) — the
-    recommended setting at full scale where 1e-4 quantile error is
-    acceptable.
     """
     forecast_df = round_grid_keys(forecast_df)
     threshold_df = round_grid_keys(threshold_df)
@@ -88,35 +80,7 @@ def compute_detailed_forecast(
     dis = F.col("dis24")
     group_keys = [*CELL_KEY, "issued_on", "valid_for", "step"]
 
-    if not exact_quantiles:
-        # Sketch path: partial aggregation compresses each group to a
-        # fixed-size buffer BEFORE the exchange, so joining thresholds
-        # at fact grain costs no shuffle bytes here — keep the
-        # classic join → flags → aggregate shape.
-        joined = forecast_df.join(F.broadcast(threshold_df), CELL_KEY, "left")
-        joined = exceedance_flags(joined, "dis24", periods)
-        prob_aggs = [
-            F.avg(F.col(f"exceed_{p}y")).alias(f"p_above_{p}y") for p in periods
-        ]
-        fractions = F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))
-        qs = F.approx_percentile(dis, fractions, F.lit(approx_accuracy))
-        out = joined.groupBy(*group_keys).agg(
-            F.min(dis).alias("min_dis"),
-            qs.alias("__qs"),
-            F.max(dis).alias("max_dis"),
-            *prob_aggs,
-        )
-        return out.select(
-            *group_keys,
-            "min_dis",
-            F.col("__qs")[0].alias("q1_dis"),
-            F.col("__qs")[1].alias("median_dis"),
-            F.col("__qs")[2].alias("q3_dis"),
-            "max_dis",
-            *[f"p_above_{p}y" for p in periods],
-        )
-
-    # Exact path: one sorted array per group, all order statistics read
+    # One sorted array per group, all order statistics read
     # from it natively. Measured ~1.8x faster than the percentile()
     # aggregate (whose per-group hash-map buffers dominate); ensemble
     # groups are small (members x 1), so the array stays tiny. The
@@ -453,13 +417,12 @@ def combine_thresholds(
 def flood_pipeline(
     forecast_df: DataFrame,
     threshold_df: DataFrame,
-    exact_quantiles: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Full flagship dataflow → (detailed_forecast, summary_forecast).
 
-    The detailed frame feeds four consumers (sink + three summary aggs);
-    callers running both outputs should ``.cache()`` it — mirrors the
-    reference's persist point (`discharge.py:313-314`).
+    Nothing is persisted here, unlike the reference's persist point
+    (`discharge.py:313-314`): both returned frames are lazy (see
+    :func:`~data_pipelines_spark.session.persisted` for the cache rule).
 
     The summary consumes the detailed frame WITHOUT the control window:
     the fused summary aggregation derives the control value itself
@@ -468,8 +431,6 @@ def flood_pipeline(
     returned detailed frame still carries ``control_dis`` (lazily — the
     window only executes for callers that materialize it).
     """
-    detailed = compute_detailed_forecast(
-        forecast_df, threshold_df, exact_quantiles=exact_quantiles
-    )
+    detailed = compute_detailed_forecast(forecast_df, threshold_df)
     summary = compute_summary_forecast(detailed)
     return add_control_member(detailed), summary

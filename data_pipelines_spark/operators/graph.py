@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipelines_spark.session import persisted
+
 _DEC = "decimal(38,12)"
 
 
@@ -75,75 +77,67 @@ def pagerank(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        raise ValueError("pagerank: empty graph")
-
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
     # degree rides the edge row from here on: one join total, not one
     # per iteration
-    e_deg = (
-        e.join(out_deg, "src")
-        .repartition("src")
-        .persist()
-    )
-    e_deg.count()  # materialize before the loop
+    e_deg = e.join(out_deg, "src").repartition("src")
+    with persisted(nodes, e_deg):
+        n_nodes = nodes.count()
+        if n_nodes == 0:
+            raise ValueError("pagerank: empty graph")
+        e_deg.count()  # materialize before the loop
 
-    base = (1.0 - damping) / n_nodes
-    ranks = nodes.select(
-        "node", F.lit(1.0 / n_nodes).alias("rank")
-    ).localCheckpoint(eager=True)
+        base = (1.0 - damping) / n_nodes
+        ranks = nodes.select(
+            "node", F.lit(1.0 / n_nodes).alias("rank")
+        ).localCheckpoint(eager=True)
 
-    has_out = out_deg.select(F.col("src").alias("node"))
+        has_out = out_deg.select(F.col("src").alias("node"))
 
-    for _ in range(iterations):
-        term = F.col("rank") / F.col("out_deg")
-        if portable:
-            term = F.round(term, 12).cast(_DEC)
-        contrib = (
-            ranks.join(e_deg, ranks["node"] == e_deg["src"])
-            .groupBy("dst")
-            .agg(F.sum(term).alias("contrib"))
-        )
-        dang = ranks.join(has_out, "node", "left_anti").agg(
-            F.sum(
-                F.round(F.col("rank"), 12).cast(_DEC)
-                if portable
-                else F.col("rank")
-            ).alias("mass")
-        )
-        [dang_mass] = dang.first()
-        dang_mass = float(dang_mass or 0.0)
-
-        new_rank = (
-            F.lit(base)
-            + damping
-            * (
-                F.coalesce(F.col("contrib").cast("double"), F.lit(0.0))
-                + F.lit(dang_mass / n_nodes)
+        for _ in range(iterations):
+            term = F.col("rank") / F.col("out_deg")
+            if portable:
+                term = F.round(term, 12).cast(_DEC)
+            contrib = (
+                ranks.join(e_deg, ranks["node"] == e_deg["src"])
+                .groupBy("dst")
+                .agg(F.sum(term).alias("contrib"))
             )
-        )
-        if portable:
-            new_rank = F.round(new_rank, 12)
-        new_ranks = nodes.join(
-            contrib, nodes["node"] == contrib["dst"], "left"
-        ).select("node", new_rank.alias("rank")).localCheckpoint(eager=True)
-
-        if tol is not None:
-            [delta] = (
-                new_ranks.alias("n")
-                .join(ranks.alias("o"), "node")
-                .agg(F.max(F.abs(F.col("n.rank") - F.col("o.rank"))))
-                .first()
+            dang = ranks.join(has_out, "node", "left_anti").agg(
+                F.sum(
+                    F.round(F.col("rank"), 12).cast(_DEC)
+                    if portable
+                    else F.col("rank")
+                ).alias("mass")
             )
-            ranks = new_ranks
-            if delta is not None and delta < tol:
-                break
-        else:
-            ranks = new_ranks
+            [dang_mass] = dang.first()
+            dang_mass = float(dang_mass or 0.0)
 
-    nodes.unpersist()
-    e_deg.unpersist()
-    return ranks
+            new_rank = (
+                F.lit(base)
+                + damping
+                * (
+                    F.coalesce(F.col("contrib").cast("double"), F.lit(0.0))
+                    + F.lit(dang_mass / n_nodes)
+                )
+            )
+            if portable:
+                new_rank = F.round(new_rank, 12)
+            new_ranks = nodes.join(
+                contrib, nodes["node"] == contrib["dst"], "left"
+            ).select("node", new_rank.alias("rank")).localCheckpoint(eager=True)
+
+            if tol is not None:
+                [delta] = (
+                    new_ranks.alias("n")
+                    .join(ranks.alias("o"), "node")
+                    .agg(F.max(F.abs(F.col("n.rank") - F.col("o.rank"))))
+                    .first()
+                )
+                ranks = new_ranks
+                if delta is not None and delta < tol:
+                    break
+            else:
+                ranks = new_ranks
+        return ranks

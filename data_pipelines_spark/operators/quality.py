@@ -194,8 +194,7 @@ def profile_numeric(
     buffer never holds the data, the only shape that survives a global
     aggregate over a 100 TB table. ``exact=True`` opts into exact
     ``percentile`` (the final reducer buffers every value of every
-    profiled column — small-table / audit use only), mirroring the
-    ``exact_quantiles`` contract of the flood ensemble aggregation.
+    profiled column — small-table / audit use only).
     ``accuracy`` tunes the sketch (error ~ 1/accuracy of rank). Values
     are profiled as DOUBLE.
     """

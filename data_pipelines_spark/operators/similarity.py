@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_pipelines_spark.session import persisted
+
 
 def _to_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -217,12 +219,11 @@ def kmeans_centroids(
     the fit: every Lloyd iteration is an action, and without the cache
     each one would repeat the full source scan — free at test scale,
     ``max_iterations`` extra passes over the corpus on a real one.
-    Unpersisted on exit either way.
     """
     data = embeddings.select(
         F.col(id_col).alias(id_col), _to_double(F.col(vec_col)).alias("__v")
-    ).persist()
-    try:
+    )
+    with persisted(data):
         init = (
             data.orderBy(id_col).limit(k).select(F.col("__v").alias("c")).collect()
         )
@@ -248,8 +249,6 @@ def kmeans_centroids(
                 break
             centroids = new_centroids
         return centroids
-    finally:
-        data.unpersist()
 
 
 def ivf_assign(

@@ -214,6 +214,11 @@ def resample_filled(
     including all-NULL observed buckets, leading/trailing gaps, and
     single-observation keys (pinned in tests/test_timeseries.py).
     """
+    if df.isStreaming:
+        raise ValueError(
+            "resample_filled needs each key's full span; use "
+            "resample(dense=False) on streams"
+        )
     keys = list(key_cols)
     bucketed = resample(
         df, keys, ts_col, value_col, interval_sec, dense=False

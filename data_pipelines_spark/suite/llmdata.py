@@ -319,9 +319,7 @@ def text_stats(spark, sf_dir):
     # Un-persisted, each branch re-ran the regex tokenizer over the
     # corpus (4 passes, ~0.2-0.5 s each at sf0.1 — most of the query's
     # warm cost). Persisting (id, text, tokens) tokenizes once; the
-    # same D1 trade corpus_doc_curation makes with full text. Caller-
-    # owned lifecycle as everywhere in this module (bench/driver clear
-    # the cache between runs).
+    # same D1 trade corpus_doc_curation makes with full text.
     toked = docs.select(
         "doc_id", "text", tokens(F.lower(t)).alias("__toks")
     ).persist()
@@ -1573,6 +1571,10 @@ def incremental_near_dup(spark, sf_dir):
     is_batch = F.col("doc_id") % 7 == 3
     batch = docs.where(is_batch)
     corpus_sigs = minhash_signatures(docs.where(~is_batch))
+    # Every branch of the pair plan derives the batch signatures; this
+    # persisted twin of that subtree serves them all (see
+    # incremental_near_duplicates).
+    minhash_signatures(batch).persist()
     pairs, _sigs = incremental_near_duplicates(
         batch, corpus_sigs, jaccard_threshold=0.5
     )
@@ -1895,12 +1897,8 @@ def portable_hash_suite(spark, sf_dir):
     # ~4.4 s warm at sf0.01 — the most expensive sweep entry). The
     # persisted frames are id+hash proxies (a few longs per doc), the
     # guide-§8 "decide over lightweight metadata" shape — never
-    # corpus-sized text. Lifecycle: the suite's returned union reads
-    # these blocks lazily, so the query builder cannot unpersist them —
-    # the CALLER (driver/bench, which clear the cache between runs)
-    # owns the entries; a resident session should clearCache() after
-    # consuming the result. Applies to all three persists here
-    # (ph_all, afp, vsig).
+    # corpus-sized text. Applies to all three persists here (ph_all,
+    # afp, vsig).
     ph_all = ph_base.unionByName(ph_planted).persist()
     ph = phash_near_duplicates(ph_all, max_hamming=6).select(
         F.lit("phash_pairs").alias("method"),

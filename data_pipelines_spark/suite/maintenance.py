@@ -436,8 +436,7 @@ def quality_report(spark, sf_dir):
     # the three separate lineitem scans (all/h0/h1) collapse to one.
     # The 2-row store frame is persisted because FOUR tiny consumers
     # (hist_row x2, drift_row's two sides) would otherwise each re-scan
-    # lineitem; caller-owned lifecycle as in suite/llmdata.py (the
-    # driver/bench clear the cache between runs).
+    # lineitem.
     halves = F.col("l_orderkey") % 2
     from data_pipelines_spark.operators.sketches import (
         merge_histogram_sketches,
@@ -501,8 +500,8 @@ def quality_report(spark, sf_dir):
     # feeds FIVE consumers (dds_rows, both exceptAll sides, the row
     # count, the quantile read-back), and the two parity-half stores
     # (two more scans before) now come from ONE grouped scan. Both
-    # frames are few-hundred-row (side, bucket, cnt) stores; persisted
-    # with the same caller-owned lifecycle as the histogram store above.
+    # frames are few-hundred-row (side, bucket, cnt) stores, persisted
+    # like the histogram store above.
     dds = quantile_sketch(li, [], "l_extendedprice", alpha=alpha).persist()
     dds_halves = quantile_sketch(
         li.withColumn("__half", halves), ["__half"], "l_extendedprice", alpha=alpha

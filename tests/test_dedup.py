@@ -221,8 +221,12 @@ def test_oph_requires_power_of_two_hashes(spark):
     from data_pipelines_spark.operators.dedup import minhash_signatures
 
     docs = spark.createDataFrame([(1, "hello world")], ["doc_id", "text"])
-    with _pytest.raises(ValueError, match="power of two"):
-        minhash_signatures(docs, num_hashes=48)
+    # 0 and 1 pass the bit test, but one bucket needs a zero-bit rank
+    # shift: forcing a 1-bit shift read bucket 0 only and silently
+    # dropped the odd-hashed shingles.
+    for n in (48, 0, 1):
+        with _pytest.raises(ValueError, match="power of two"):
+            minhash_signatures(docs, num_hashes=n)
 
 
 def test_incremental_near_duplicates_matches_full_run(spark):

@@ -91,12 +91,15 @@ def test_pagerank_tol_early_stop_converges(spark):
         assert got[n] == pytest.approx(ref[n], abs=1e-5), n
 
 
-def test_pagerank_input_validation(spark):
+def test_pagerank_input_validation(spark, persisted_rdd_ids):
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     with pytest.raises(ValueError, match="iterations"):
         pagerank(df, iterations=0)
     with pytest.raises(ValueError, match="damping"):
         pagerank(df, damping=1.0)
     empty = spark.createDataFrame([], "src long, dst long")
+    before = persisted_rdd_ids()
     with pytest.raises(ValueError, match="empty graph"):
         pagerank(empty)
+    # the node frame was cached before the check raised; it is released
+    assert persisted_rdd_ids() <= before

@@ -600,11 +600,12 @@ def test_streaming_dedup_state_is_watermark_bounded(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_stream_near_dup_dedup_sink(spark):
+def test_stream_near_dup_dedup_sink(spark, persisted_rdd_ids):
     """Two micro-batches through the signature-store dedup sink: a doc
     near-duplicating batch-1 content is dropped in batch 2 (cross-batch
     store match), an intra-batch near-dup keeps only the lower id, and
-    the store ends with exactly the survivors' signatures."""
+    the store ends with exactly the survivors' signatures, and no
+    micro-batch leaves a cached block behind."""
     import shutil
     import tempfile
 
@@ -639,6 +640,7 @@ def test_stream_near_dup_dedup_sink(spark):
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{tmp}/in/*")
         )
+        cached_before = persisted_rdd_ids()
         writer = stream_near_dup_dedup_sink(
             stream,
             f"{tmp}/out",
@@ -652,6 +654,7 @@ def test_stream_near_dup_dedup_sink(spark):
         spark.createDataFrame(b2, schema).coalesce(1).write.parquet(f"{tmp}/in/b")
         q.processAllAvailable()
         q.stop()
+        assert persisted_rdd_ids() <= cached_before
 
         kept = sorted(
             r["doc_id"] for r in spark.read.parquet(f"{tmp}/out").collect()

@@ -14,6 +14,7 @@ from data_pipelines_spark.operators.timeseries import (
     forward_fill,
     interpolate_linear,
     resample,
+    resample_filled,
 )
 
 H = 3600
@@ -172,6 +173,9 @@ def test_resample_stream_rejects_dense(spark):
         stream = stream_events_from_dir(spark, f"{tmp}/in", ev.schema)
         with pytest.raises(ValueError, match="dense"):
             resample(stream, ["user"], "ts", "value", H, dense=True)
+        # the fill's lead() and unbounded windows need the full span too
+        with pytest.raises(ValueError, match="stream"):
+            resample_filled(stream, ["user"], "ts", "value", H)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
