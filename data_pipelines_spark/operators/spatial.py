@@ -11,11 +11,15 @@ it in two stages (SURVEY.md §2.4 J9):
    bucket; an equi-join on the bucket key + a bbox range predicate
    bounds the candidate set. All JVM-side, broadcastable when the
    polygon side is small.
-2. **Exact test**: vectorized even-odd ray casting over Arrow batches
-   (`mapInPandas` + numpy) — no shapely/GDAL dependency, matching the
-   rasterizer's cell-center rule. Points exactly on an edge follow the
-   even-odd crossing convention (document, don't rely: real pipelines
-   place cell centers off polygon edges).
+2. **Exact test**: even-odd ray casting as a JVM expression per
+   candidate row (`points_in_rings_expr`), over rings parsed once per
+   polygon on the build side (`wkt_rings_expr`) — no Python worker and
+   no shapely/GDAL dependency, matching the rasterizer's cell-center
+   rule. Points exactly on an edge follow the even-odd crossing
+   convention (document, don't rely: real pipelines place cell centers
+   off polygon edges). The numpy kernel below (`parse_wkt_rings`,
+   `points_in_rings`) is the reference the expression is pinned
+   against, verdict for verdict.
 
 Scale: bucket size trades candidate-set size vs polygon duplication;
 for z zones averaging b buckets each the build side is z·b rows —
@@ -26,13 +30,13 @@ candidates, ~(points in bbox) per zone.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from data_pipelines_spark.functions.text import let
+from data_pipelines_spark.plans.parallelism import spread
 
 
 _RING_RE = None  # compiled lazily so import stays cheap
@@ -43,10 +47,11 @@ def wkt_rings_expr(wkt: Column) -> Column:
     ``array<array<struct<x:double,y:double>>>`` — one inner array per
     parenthesized ring of a POLYGON/MULTIPOLYGON WKT. Both engines
     parse coordinate text with correctly-rounded decimal→binary
-    conversion, so the doubles are bit-identical to the Python path's.
-    Assumes well-formed polygon WKT (the Python parser raises on
-    non-polygons; this expression is for callers that construct or
-    pre-validate their geometry)."""
+    conversion, so the doubles are bit-identical to the numpy parser's.
+    Raises at evaluation, with the Python parser's messages, on WKT
+    that is NULL or not a polygon (a LINESTRING would otherwise parse
+    as a ring) and on WKT with no ring (``POLYGON EMPTY`` would
+    otherwise match nothing, silently)."""
 
     def parse_pt(pt: Column) -> Column:
         xy = F.split(F.trim(pt), r"\s+")
@@ -54,9 +59,20 @@ def wkt_rings_expr(wkt: Column) -> Column:
             xy[0].cast("double").alias("x"), xy[1].cast("double").alias("y")
         )
 
-    bodies = F.regexp_extract_all(wkt, F.lit(r"\(([^()]+)\)"), 1)
-    return F.transform(
-        bodies, lambda b: F.transform(F.split(b, ","), parse_pt)
+    def fail(prefix: str) -> Column:
+        head = F.substring(F.coalesce(wkt, F.lit("NULL")), 1, 40)
+        return F.raise_error(F.concat(F.lit(prefix), head))
+
+    def rings(bodies: Column) -> Column:
+        return F.when(F.size(bodies) == 0, fail("no rings in WKT: ")).otherwise(
+            F.transform(bodies, lambda b: F.transform(F.split(b, ","), parse_pt))
+        )
+
+    is_polygon = F.coalesce(wkt.rlike(r"(?i)^\s*(MULTI)?POLYGON"), F.lit(False))
+    return F.when(
+        ~is_polygon, fail("not a polygon WKT: ")
+    ).otherwise(
+        let(F.regexp_extract_all(wkt, F.lit(r"\(([^()]+)\)"), 1), rings)
     )
 
 
@@ -69,13 +85,12 @@ def points_in_rings_expr(rings: Column, px: Column, py: Column) -> Column:
     match bit-for-bit; the division is evaluated lazily (CASE WHEN)
     only on crossing edges.
 
-    Cost model (caller contract): higher-order ``aggregate`` is
-    CodegenFallback, so this runs INTERPRETED at O(edges) per candidate
-    row — the right trade for few-vertex polygons (the suite's zones
-    are 4-edge rectangles). For many-vertex geometry, keep the numpy
-    ``points_in_rings`` path (the ``exact="python"`` default of
-    ``point_in_polygon_join``), which vectorizes hundreds of edges over
-    whole Arrow batches."""
+    Cost model: higher-order ``aggregate`` is CodegenFallback, so this
+    runs INTERPRETED at O(edges) per candidate row. That still beats
+    shipping candidates to Python workers for a numpy ray cast at every
+    polygon size measured, from 33 to 1025 vertices per basin over a
+    40 000-pixel raster (the bucket prefilter keeps it to ~1.3
+    candidates per pixel), so it is the engine's only exact test."""
 
     def ring_parity(ring: Column) -> Column:
         def step(acc: Column, i: Column) -> Column:
@@ -165,33 +180,6 @@ def points_in_rings(
     return inside
 
 
-def polygons_with_bbox(
-    polygons: DataFrame, id_col: str = "id", wkt_col: str = "geometry"
-) -> DataFrame:
-    """Attach bbox columns (min_x, min_y, max_x, max_y) by parsing the
-    WKT once per polygon (Arrow-batched)."""
-
-    schema = f"{id_col} long, {wkt_col} string, min_x double, min_y double, max_x double, max_y double"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            all_pts = pdf[wkt_col].map(
-                lambda w: np.concatenate(parse_wkt_rings(w), axis=0)
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    wkt_col: pdf[wkt_col],
-                    "min_x": all_pts.map(lambda r: r[:, 0].min()),
-                    "min_y": all_pts.map(lambda r: r[:, 1].min()),
-                    "max_x": all_pts.map(lambda r: r[:, 0].max()),
-                    "max_y": all_pts.map(lambda r: r[:, 1].max()),
-                }
-            )
-
-    return polygons.select(id_col, wkt_col).mapInPandas(run, schema)
-
-
 def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame,
@@ -204,7 +192,6 @@ def point_in_polygon_join(
     broadcast: bool | None = None,
     max_broadcast_zones: int = 100_000,
     max_broadcast_bytes: int = 64 * 1024 * 1024,
-    exact: str = "python",
 ) -> DataFrame:
     """(point_id, zone_id) pairs for points contained in polygons.
 
@@ -221,26 +208,15 @@ def point_in_polygon_join(
     falls back to the shuffle join. Callers that know their zone table
     (as the suite does) pass ``broadcast`` explicitly.
 
-    ``exact`` picks the exact-containment implementation:
-
-    - ``"python"`` (default) — vectorized numpy ray casting over Arrow
-      batches. Right when polygons are complex (hundreds+ of edges):
-      the per-task ring cache parses each WKT once and numpy tests a
-      whole batch of points per edge, amortizing the Python boundary.
-    - ``"native"`` (r14, guide §4.1) — the rings are parsed ONCE per
-      polygon with native expressions on the build side and the
-      even-odd test runs as a JVM expression per candidate row: the
-      two Python stages (bbox parse + exact test), their Arrow
-      serialization, and the skew re-spread exchange all disappear
-      from the plan. Right for simple geometry (the suite's
-      rectangular zones: 4 edges), where the per-candidate HOF cost is
-      trivial and the fixed Python-stage latency dominated. Verdicts
-      are bit-identical to the numpy kernel (same IEEE edge
-      arithmetic — pinned in tests/test_spatial_joins.py); requires
-      well-formed polygon WKT.
+    The rings are parsed once per polygon with native expressions on
+    the build side, and the even-odd test runs as a JVM expression per
+    candidate row, so the plan has no Python stage. Verdicts are
+    bit-identical to the numpy kernel (same IEEE edge arithmetic,
+    pinned in tests/test_spatial_joins.py). A NULL, non-polygon or
+    ring-less WKT raises (see :func:`wkt_rings_expr`). ``zone_id`` is
+    a long whatever the type of ``poly_id``; the point id keeps its
+    type (rasterize_zones passes a struct<x,y> content key).
     """
-    if exact not in ("python", "native"):
-        raise ValueError(f"exact must be 'python' or 'native', got {exact!r}")
     if broadcast is None:
         stats = polygons._jdf.queryExecution().optimizedPlan().stats()
         row_count = stats.rowCount()
@@ -249,50 +225,38 @@ def point_in_polygon_join(
         else:
             broadcast = int(str(stats.sizeInBytes())) <= max_broadcast_bytes
 
-    if exact == "native":
-        from data_pipelines_spark.functions.text import let
-
-        # Parse rings once per polygon and derive the bbox from them in
-        # the same projection — no Python stage on the build side.
-        def with_bbox(rings: Column) -> Column:
-            def bbox(pts: Column) -> Column:
-                xs = F.transform(pts, lambda p: p.getField("x"))
-                ys = F.transform(pts, lambda p: p.getField("y"))
-                return F.struct(
-                    F.array_min(xs).alias("min_x"),
-                    F.array_min(ys).alias("min_y"),
-                    F.array_max(xs).alias("max_x"),
-                    F.array_max(ys).alias("max_y"),
-                )
-
+    # Parse rings once per polygon and derive the bbox from them in the
+    # same projection.
+    def with_bbox(rings: Column) -> Column:
+        def bbox(pts: Column) -> Column:
+            xs = F.transform(pts, lambda p: p.getField("x"))
+            ys = F.transform(pts, lambda p: p.getField("y"))
             return F.struct(
-                rings.alias("rings"), let(F.flatten(rings), bbox).alias("bb")
+                F.array_min(xs).alias("min_x"),
+                F.array_min(ys).alias("min_y"),
+                F.array_max(xs).alias("max_x"),
+                F.array_max(ys).alias("max_y"),
             )
 
-        polys = polygons.select(
-            F.col(poly_id),
-            let(wkt_rings_expr(F.col(wkt_col)), with_bbox).alias("__g"),
-        ).select(
-            poly_id,
-            F.col("__g.rings").alias("__rings"),
-            F.col("__g.bb.min_x").alias("min_x"),
-            F.col("__g.bb.min_y").alias("min_y"),
-            F.col("__g.bb.max_x").alias("max_x"),
-            F.col("__g.bb.max_y").alias("max_y"),
+        return F.struct(
+            rings.alias("rings"), let(F.flatten(rings), bbox).alias("bb")
         )
-        geom_col = "__rings"
-    else:
-        polys = polygons_with_bbox(polygons, poly_id, wkt_col)
-        geom_col = wkt_col
+
+    polys = polygons.select(
+        F.col(poly_id).alias("__zone_id"),
+        let(wkt_rings_expr(F.col(wkt_col)), with_bbox).alias("__g"),
+    ).select(
+        "__zone_id",
+        F.col("__g.rings").alias("__rings"),
+        F.col("__g.bb.min_x").alias("min_x"),
+        F.col("__g.bb.min_y").alias("min_y"),
+        F.col("__g.bb.max_x").alias("max_x"),
+        F.col("__g.bb.max_y").alias("max_y"),
+    )
 
     # Explode each polygon onto every bucket its bbox covers.
     poly_buckets = polys.select(
-        F.col(poly_id).alias("__zone_id"),
-        geom_col,
-        "min_x",
-        "min_y",
-        "max_x",
-        "max_y",
+        "*",
         F.explode(
             F.sequence(
                 F.floor(F.col("min_x") / bucket_size),
@@ -316,13 +280,11 @@ def point_in_polygon_join(
         F.floor(F.col(x_col) / bucket_size).alias("bx"),
         F.floor(F.col(y_col) / bucket_size).alias("by"),
     )
-    if exact == "native" and broadcast:
-        from data_pipelines_spark.plans.parallelism import spread
-
-        # The ray-cast lambda below is evaluated OUTSIDE whole-stage
-        # codegen (higher-order functions interpret), so a narrow input
-        # would serialize the per-candidate work onto one core. Widen
-        # the POINT side before the broadcast join — the exchange then
+    if broadcast:
+        # The ray-cast lambda is evaluated OUTSIDE whole-stage codegen
+        # (higher-order functions interpret), so a narrow input would
+        # serialize the per-candidate work onto one core. Widen the
+        # POINT side before the broadcast join — the exchange then
         # carries narrow point rows, not candidates with ring arrays —
         # and join + exact filter run in that same widened stage.
         # spread() is a no-op at real scale (input already wide).
@@ -335,48 +297,22 @@ def point_in_polygon_join(
         & (F.col("__py") >= F.col("min_y"))
         & (F.col("__py") <= F.col("max_y"))
     )
-    # Keep ONLY the columns the exact test reads (guide §4.1): the
-    # bucket ids and bbox columns are spent on the prefilter above, and
-    # leaving them in would both widen the skew-repartition shuffle
-    # below and serialize them into every Arrow batch crossing the
-    # Python boundary.
-    cand = cand.select(point_id, "__zone_id", geom_col, "__px", "__py")
+    # Keep ONLY the columns the exact test reads: the bucket ids and
+    # bbox columns are spent on the prefilter above, and leaving them in
+    # would widen the skew re-spread below.
+    cand = cand.select(point_id, "__zone_id", "__rings", "__px", "__py")
 
-    if exact == "native":
-        # Pure-JVM exact test: one filter expression per candidate row —
-        # no Python stage, no Arrow batches (point-side spread above
-        # keeps the interpreted lambda parallel on narrow local
-        # fixtures; the shuffle path is already wide after its join).
-        return cand.where(
-            points_in_rings_expr(
-                F.col("__rings"), F.col("__px"), F.col("__py")
-            )
-        ).select(
-            point_id,
-            # the python path's output schema declares zone_id long —
-            # mirror it so both impls are drop-in interchangeable
-            F.col("__zone_id").cast("long").alias("zone_id"),
-        )
-
-    from data_pipelines_spark.plans.parallelism import spread
-
-    if broadcast:
-        # Broadcast path: candidates keep the points scan's partitioning
-        # (balanced by construction); spread only widens a single-file
-        # input so the Python exact test isn't serialized on one core.
-        cand = spread(cand)
-    else:
+    if not broadcast:
         # Shuffle path: the join leaves candidates hash-partitioned by
         # (bx, by), and clustered points (a city bucket) or a
-        # continent-sized polygon over them concentrate the Python-side
-        # exact test into few tasks (measured: 100% of candidates in
-        # ONE partition on a clustered fixture). Re-spread by
+        # continent-sized polygon over them concentrate the exact test
+        # into few tasks (measured: 100% of candidates in ONE
+        # partition on a clustered fixture). Re-spread by
         # (zone, content-salt): the salt is derived from the point
         # coordinates — deterministic under task retry, the
         # plans/skew.py discipline — so any one zone's candidate set
-        # splits ~salt_w ways while zone locality keeps the per-task
-        # ring-parse cache effective. Explicit numPartitions keeps AQE
-        # from re-coalescing the balance away.
+        # splits ~salt_w ways. Explicit numPartitions keeps AQE from
+        # re-coalescing the balance away.
         sc = points.sparkSession.sparkContext
         salt_w = max(16, sc.defaultParallelism)
         cand = cand.repartition(
@@ -385,34 +321,9 @@ def point_in_polygon_join(
             F.pmod(F.xxhash64(F.col("__px"), F.col("__py")), F.lit(salt_w)),
         )
 
-    # Carry the caller's point-id type through the exact test unchanged
-    # (rasterize_zones passes a struct<x,y> content key, not a long).
-    pid_type = points.schema[point_id].dataType.simpleString()
-    out_schema = f"{point_id} {pid_type}, zone_id long"
-
-    def exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ring_cache: dict[str, list[np.ndarray]] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            keep_ids, keep_zones = [], []
-            for wkt, grp in pdf.groupby(wkt_col, sort=False):
-                rings = ring_cache.get(wkt)
-                if rings is None:
-                    rings = ring_cache[wkt] = parse_wkt_rings(wkt)
-                mask = points_in_rings(
-                    grp["__px"].to_numpy(), grp["__py"].to_numpy(), rings
-                )
-                keep_ids.append(grp[point_id].to_numpy()[mask])
-                keep_zones.append(grp["__zone_id"].to_numpy()[mask])
-            yield pd.DataFrame(
-                {
-                    point_id: np.concatenate(keep_ids) if keep_ids else [],
-                    "zone_id": np.concatenate(keep_zones) if keep_zones else [],
-                }
-            )
-
-    return cand.mapInPandas(exact, out_schema)
+    return cand.where(
+        points_in_rings_expr(F.col("__rings"), F.col("__px"), F.col("__py"))
+    ).select(point_id, F.col("__zone_id").cast("long").alias("zone_id"))
 
 
 def rasterize_zones(

@@ -15,6 +15,7 @@ Two context managers scope state to a block of jobs:
 from __future__ import annotations
 
 import os
+import warnings
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,23 +53,38 @@ _RUNTIME_CONF = {
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-mutable engine defaults to an existing session."""
+    """Apply runtime-mutable engine defaults to an existing session.
+
+    A conf the hosting driver has locked down keeps the host's value;
+    the engine still functions with it, and one warning names every
+    key that could not be set, with its error.
+    """
+    failed: dict[str, Exception] = {}
     for key, value in _RUNTIME_CONF.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            # Some confs may be locked down by the hosting driver; the
-            # engine still functions, just with the host's settings.
-            pass
+        except Exception as exc:
+            failed[key] = exc
+    key = "spark.sql.shuffle.partitions"
     try:
         # The stock 200 shuffle partitions waste task overhead at local
         # scale and in iterative plans AQE can't re-coalesce (e.g.
         # after localCheckpoint). Only replace the untouched default —
         # an explicitly configured value (ours or the host's) wins.
-        if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-            spark.conf.set("spark.sql.shuffle.partitions", "64")
-    except Exception:
-        pass
+        if spark.conf.get(key) == "200":
+            spark.conf.set(key, "64")
+    except Exception as exc:
+        failed[key] = exc
+    if failed:
+        # First line only: a JVM-side error carries its whole stack trace.
+        detail = "; ".join(
+            f"{k} ({type(e).__name__}: {(str(e).strip().splitlines() or [''])[0]})"
+            for k, e in failed.items()
+        )
+        warnings.warn(
+            f"could not set Spark confs, the session keeps its own values: {detail}",
+            stacklevel=2,
+        )
     return spark
 
 

@@ -33,8 +33,8 @@ def _dec(col, p=3):
     """,
 )
 def spatial_join_zones(spark, sf_dir):
-    """J9: point-in-polygon join — bucket prefilter + exact vectorized
-    ray casting (operators/spatial.py). Zones are synthesized rectangles
+    """J9: point-in-polygon join — bucket prefilter + exact ray casting
+    (operators/spatial.py). Zones are synthesized rectangles
     (one per nation) so the oracle can state containment arithmetically;
     the Spark side runs the *general* polygon path on their WKT."""
     tune(spark)
@@ -62,16 +62,8 @@ def spatial_join_zones(spark, sf_dir):
         ((F.col("c_custkey") % 50) + 0.5).cast("double").alias("x"),
         (((F.col("c_custkey") * 7) % 50) + 0.5).cast("double").alias("y"),
     )
-    # zones is the nation dimension (25 rows) — known broadcast-safe,
-    # so skip the size probe (broadcast=None would count() first).
-    # exact="native" (r14): the zones are 4-edge rectangles, so the
-    # JVM-expression ray cast replaces both Python stages (bbox parse +
-    # exact test) and the re-spread exchange — the whole query becomes
-    # one scan-stage broadcast join + filter (guide §4.1; verdict
-    # equality with the numpy kernel pinned in tests).
-    return point_in_polygon_join(
-        points, zones, bucket_size=10.0, broadcast=True, exact="native"
-    )
+    # zones is the nation dimension (25 rows): known broadcast-safe.
+    return point_in_polygon_join(points, zones, bucket_size=10.0, broadcast=True)
 
 
 @register(

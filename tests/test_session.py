@@ -1,5 +1,6 @@
-"""Session helpers: the `persisted` cache-lifecycle block and the
-Python workers' import path set by `get_spark`."""
+"""Session helpers: the `persisted` cache-lifecycle block, the
+Python workers' import path set by `get_spark`, and `tune`'s report of
+the confs it could not set."""
 
 from __future__ import annotations
 
@@ -7,10 +8,12 @@ import os
 import subprocess
 import sys
 import textwrap
+import warnings
+from types import SimpleNamespace
 
 import pytest
 
-from data_pipelines_spark.session import persisted
+from data_pipelines_spark.session import persisted, tune
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -39,16 +42,13 @@ _WORKER_SCRIPT = textwrap.dedent(
     """
     import sys
     sys.path.insert(0, sys.argv[1])
-    from data_pipelines_spark.operators.spatial import rasterize_zones
+    from data_pipelines_spark.operators.tokenizer import bpe_encode
     from data_pipelines_spark.session import get_spark
 
     spark = get_spark(master="local[1]", shuffle_partitions=1)
-    zones = spark.createDataFrame(
-        [(1, "POLYGON ((0 0,2 0,2 2,0 2,0 0))")], "id long, geometry string"
-    )
-    pixels = spark.createDataFrame([(0.5, 0.5), (3.5, 3.5)], "x double, y double")
-    rows = rasterize_zones(pixels, zones, bucket_size=2.0).collect()
-    print("ZONED", [(r["x"], r["id"]) for r in rows])
+    docs = spark.createDataFrame([(1, "low lower"), (2, "")], "id long, text string")
+    rows = bpe_encode(docs, [("l", "o"), ("lo", "w")]).orderBy("id").collect()
+    print("ENCODED", [r["bpe_tokens"] for r in rows])
     spark.stop()
     """
 )
@@ -57,7 +57,7 @@ _WORKER_SCRIPT = textwrap.dedent(
 def test_workers_import_package_from_another_directory(tmp_path):
     """A script that puts the repository on its own ``sys.path`` and
     runs from elsewhere must still reach the package inside the Python
-    workers that `rasterize_zones`' point-in-polygon test runs in."""
+    workers that `bpe_encode`'s `mapInPandas` runs in."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_DRIVER_MEMORY"] = "1g"
     out = subprocess.run(
@@ -69,4 +69,34 @@ def test_workers_import_package_from_another_directory(tmp_path):
         cwd=tmp_path,
     )
     assert out.returncode == 0, out.stderr[-4000:]
-    assert "ZONED [(0.5, 1)]" in out.stdout
+    assert "ENCODED [['low', '</w>', 'low', 'e', 'r', '</w>'], []]" in out.stdout
+
+
+class _LockedConf:
+    """A session's ``conf`` that refuses one key, as a hosting driver
+    that has locked it down does."""
+
+    def __init__(self, locked: str):
+        self.locked, self.values = locked, {}
+
+    def set(self, key, value):
+        if key == self.locked:
+            raise RuntimeError(f"Cannot modify the value of {key}\n\tat jvm frame")
+        self.values[key] = value
+
+    def get(self, key):
+        return self.values.get(key, "200")
+
+
+def test_tune_warns_once_naming_the_confs_it_could_not_set():
+    locked = "spark.sql.adaptive.skewJoin.enabled"
+    session = SimpleNamespace(conf=_LockedConf(locked))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert tune(session) is session
+    assert len(caught) == 1, [str(w.message) for w in caught]
+    message = str(caught[0].message)
+    assert f"{locked} (RuntimeError: Cannot modify the value of {locked})" in message
+    assert "jvm frame" not in message
+    assert session.conf.values["spark.sql.session.timeZone"] == "UTC"
+    assert session.conf.values["spark.sql.shuffle.partitions"] == "64"

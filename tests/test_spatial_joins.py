@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -22,6 +23,12 @@ TRIANGLE = "POLYGON ((0 0,10 0,0 10,0 0))"
 CONCAVE = "POLYGON ((0 0,10 0,10 10,5 5,0 10,0 0))"  # notch at top
 DONUT = "POLYGON ((0 0,10 0,10 10,0 10,0 0),(3 3,7 3,7 7,3 7,3 3))"  # lake hole
 MULTI = "MULTIPOLYGON (((0 0,4 0,4 4,0 4,0 0)),((20 20,24 20,24 24,20 24,20 20)))"
+
+
+def _assert_no_python_stage(df, label):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, (label, node)
 
 
 def test_parse_wkt_polygon():
@@ -256,13 +263,10 @@ def test_rasterize_zones_key_is_content_derived(spark):
             ).collect()
         )
         assert redo == base
-    plan = (
-        rasterize_zones(pixels, zones, bucket_size=4.0)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    zoned = rasterize_zones(pixels, zones, bucket_size=4.0)
+    plan = zoned._jdf.queryExecution().executedPlan().toString()
     assert "monotonically_increasing_id" not in plan
+    _assert_no_python_stage(zoned, "rasterize_zones")
 
 
 # ---------------------------------------------------------------------------
@@ -673,8 +677,8 @@ def test_asof_join_null_keys_match_nothing(spark):
 
 def test_pip_join_shuffle_path_balances_giant_zone_and_hot_bucket(spark):
     """Polygon-skew hardening: clustered points (one hot bucket) under
-    a continent-sized polygon must NOT funnel the Python exact test
-    into one task on the shuffle path. Before the round-7 salted
+    a continent-sized polygon must NOT funnel the exact test into one
+    task on the shuffle path. Before the round-7 salted
     re-spread, this fixture measured 100% of candidates in a single
     partition; now the largest partition must hold a bounded share.
     Results must also be identical between the two join strategies."""
@@ -730,38 +734,59 @@ def test_pip_join_shuffle_path_balances_giant_zone_and_hot_bucket(spark):
 
 
 def test_native_exact_matches_python_on_all_shapes(spark):
-    """r14: the JVM-expression exact test (exact="native") must agree
-    with the numpy ray-cast verdict point-for-point on every geometry
-    class — donut holes, multipolygon parts, concave notches — on both
-    join paths, and its plan must contain no Python stage."""
+    """The JVM-expression exact test must agree with the numpy ray-cast
+    reference (`points_in_rings` over `parse_wkt_rings`) point-for-point
+    on every geometry class — donut holes, multipolygon parts, concave
+    notches, on-edge points — on both join paths, and its plan must
+    contain no Python stage."""
+    shapes = {1: DONUT, 2: MULTI, 3: CONCAVE, 4: TRIANGLE}
     zones = spark.createDataFrame(
-        [(1, DONUT), (2, MULTI), (3, CONCAVE), (4, TRIANGLE)],
-        "id long, geometry string",
+        list(shapes.items()), "id long, geometry string"
     )
-    points = spark.createDataFrame(
-        [(i, float(i % 26) - 0.5, float((i * 7) % 26) - 0.5) for i in range(200)]
-        # on-edge points follow the same even-odd convention
-        + [(900, 0.0, 5.0), (901, 10.0, 5.0), (902, 5.0, 0.0), (903, 3.0, 5.0)],
-        "point_id long, x double, y double",
-    )
+    rows = [
+        (i, float(i % 26) - 0.5, float((i * 7) % 26) - 0.5) for i in range(200)
+    ]
+    # on-edge points follow the same even-odd convention
+    rows += [(900, 0.0, 5.0), (901, 10.0, 5.0), (902, 5.0, 0.0), (903, 3.0, 5.0)]
+    points = spark.createDataFrame(rows, "point_id long, x double, y double")
+    ids = np.array([r[0] for r in rows])
+    px = np.array([r[1] for r in rows])
+    py = np.array([r[2] for r in rows])
+    want = {
+        (int(pid), zid)
+        for zid, wkt in shapes.items()
+        for pid in ids[points_in_rings(px, py, parse_wkt_rings(wkt))]
+    }
     for bc in (True, False):
-        py = point_in_polygon_join(
-            points, zones, bucket_size=6.0, broadcast=bc, exact="python"
+        got = point_in_polygon_join(points, zones, bucket_size=6.0, broadcast=bc)
+        pairs = {(r["point_id"], r["zone_id"]) for r in got.collect()}
+        assert pairs == want, (bc, pairs - want, want - pairs)
+        assert got.schema.simpleString() == "struct<point_id:bigint,zone_id:bigint>"
+        _assert_no_python_stage(got, bc)
+
+
+def test_join_rejects_bad_geometry(spark):
+    """A WKT that is NULL, not a polygon, or holds no ring fails the
+    join with the numpy parser's messages, on both join paths, instead
+    of being read as a ring or dropped."""
+    points = spark.createDataFrame(
+        [(1, 0.5, 0.5)], "point_id long, x double, y double"
+    )
+    cases = [
+        ("LINESTRING (0 0, 1 1, 1 0, 0 0)", "not a polygon WKT: LINESTRING"),
+        ("POLYGON EMPTY", "no rings in WKT: POLYGON EMPTY"),
+        (None, "not a polygon WKT: NULL"),
+    ]
+    for wkt, message in cases:
+        if wkt is not None:
+            with pytest.raises(ValueError, match=message):
+                parse_wkt_rings(wkt)
+        zones = spark.createDataFrame(
+            [(1, "POLYGON ((0 0,1 0,1 1,0 1,0 0))"), (2, wkt)],
+            "id long, geometry string",
         )
-        nat = point_in_polygon_join(
-            points, zones, bucket_size=6.0, broadcast=bc, exact="native"
-        )
-        a = {(r["point_id"], r["zone_id"]) for r in py.collect()}
-        b = {(r["point_id"], r["zone_id"]) for r in nat.collect()}
-        assert a == b, (bc, a - b, b - a)
-        assert py.schema == nat.schema
-        plan = nat._jdf.queryExecution().executedPlan().toString()
-        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-            assert node not in plan, (bc, node)
-
-
-def test_native_exact_rejects_bad_mode():
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="exact"):
-        point_in_polygon_join(None, None, 1.0, exact="banana")
+        for bc in (True, False):
+            with pytest.raises(Exception, match=message):
+                point_in_polygon_join(
+                    points, zones, bucket_size=1.0, broadcast=bc
+                ).collect()
